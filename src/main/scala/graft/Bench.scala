@@ -45,7 +45,7 @@ object Bench {
     val iters = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "5").toInt
     // session confs + rationale live in ONE place (round-16 advice):
     // GraftSession — Bench/Verify/ScaleGen/ScaleGate all build there,
-    // and withStreamConfs pins GraftSession.InitialPartitionsKey.
+    // and Drain.withStreamConfs pins GraftSession.InitialPartitionsKey.
     val spark = GraftSession.build()
     // The driver parses the LAST ~2000 chars of stdout+stderr for the
     // bench line; chatty-but-intentional WARNs (global bounded-small

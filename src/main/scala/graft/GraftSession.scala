@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The ONE place the entry points' session confs live (round-16 advice:
   * the AQE initial width + its env override were duplicated verbatim in
-  * Bench and Verify, and withStreamConfs had to independently know to
+  * Bench and Verify, and Drain.withStreamConfs had to independently know to
   * pin the same key — three coupled sites, and the q123 regression that
   * round came from one site not knowing about another). Every local
   * entry point (Bench, Verify, ScaleGen, ScaleGate) builds through
@@ -29,7 +29,7 @@ object GraftSession {
     * count (parallelismFirst default), so small-SF plans keep their
     * task counts while corpus-scale shuffles get memory-bounded
     * partitions. Streaming drains disable AQE on the stateful plan and
-    * pin the explicit withStreamConfs sizing on their batch bodies. */
+    * pin the explicit Drain.withStreamConfs sizing on their batch bodies. */
   def initialPartitions: String =
     sys.env.getOrElse("SPARK_GRAFT_INITIAL_PARTITIONS", "512")
 

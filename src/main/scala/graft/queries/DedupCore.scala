@@ -37,7 +37,7 @@ trait DedupCore { self: DedupQueries.type =>
     * read-back I/O on re-consumption — bounded, local, and paid only
     * at gate scale.
     *
-    * DATA-ADAPTIVE like [[DedupStreaming.textStreamWidth]]: the level
+    * DATA-ADAPTIVE like [[graft.streaming.Drain.textStreamWidth]]: the level
     * flips to disk once the corpus passes [[StageSerMinBytes]] —
     * sf0.1 and below stay deserialized in memory (the bench protocol;
     * disk staging there costs ~+1.5s on q142 for nothing). At 100 TB

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
 import graft.sources.Tables
+import graft.streaming.Drain
 
 /** SimHash Hamming near-dup family: bit-voted fingerprints, pigeonhole block index, incremental probe (q127/q128/q129).
   *
@@ -132,53 +133,29 @@ trait DedupSimhash { self: DedupQueries.type =>
       .select(col("dd").as("delta_id"), col("cd").as("corpus_id"), col("hamming"))
   }
 
-  /** q129's body: q105's drain shape (3 file drops, checkpointed
-    * AvailableNow, maxFilesPerTrigger=1, batch_id-partitioned dynamic-
-    * overwrite sink, chaos/scratch/resume test hooks) with the per-
-    * micro-batch work swapped for the SimHash probe. Per-batch matches
-    * are globally exact because the index is static corpus-side and
-    * the drops partition the delta — each arriving doc is fingerprinted
-    * and scored in exactly one batch. */
+  /** q129's body: q105's drain shape with the per-micro-batch work
+    * swapped for the SimHash probe. Per-batch matches are globally
+    * exact because the index is static corpus-side and the drops
+    * partition the delta — each arriving doc is fingerprinted and
+    * scored in exactly one batch. */
   private[graft] def streamSimhashDedup(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
     // force-build the fingerprint index on THIS session before the
     // stream starts (micro-batches run on a clone sharing the catalog)
     simhashIndexTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (streamScratch("graft_q129_src"),
-        streamScratch("graft_q129_ckpt")))
-    val table = JvmScratch.tableName("stream_simhash_dedup")
-    try {
-      if (!resume) {
-        val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
-        stageDropsCached(s, dir, "q129", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_simhash_dedup")
-        createBatchSink(s, table, Seq(
-          "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s, DedupQueries.textStreamWidth(s, dir)) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            simhashMatches(batch.sparkSession, dir, batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(table)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(table)
-      s.table(table).select("delta_id", "corpus_id", "hamming")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_simhash_dedup",
+      "delta_id" -> "bigint", "corpus_id" -> "bigint", "hamming" -> "bigint")
+    val delta = Tables.documents(s, dir).filter(col("doc_id") % 10 === 7)
+    Drain.drops(s, dir, "q129", "documents.parquet", Seq(out),
+        chaos, scratch, resume,
+        width = Drain.textStreamWidth(s, dir))(
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(
+        simhashMatches(batch.sparkSession, dir, batch), out.table, batchId)
+    }
+    s.table(out.table).select("delta_id", "corpus_id", "hamming")
   }
 
 }

@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * each other's tables mid-read; a fresh directory per invocation would
   * leak a table copy every bench iteration. Per-JVM name + location is
   * the bounded middle: repeated in-JVM invocations overwrite one disk
-  * footprint, concurrent JVMs never share a path, and the shutdown hook
-  * removes the directory on exit.
+  * footprint, concurrent JVMs never share a path, and the location sits
+  * under the JVM's scratch root ([[graft.streaming.Drain.root]]), which
+  * goes with the JVM. This database is LOCAL bench/test scratch by
+  * contract — a production pipeline's sinks are real tables on durable
+  * shared storage.
   */
 object JvmScratch {
 
@@ -20,24 +23,7 @@ object JvmScratch {
   /** Per-JVM database name — distinct across JVMs, stable within one. */
   val dbName = s"graft_scratch_$pid"
 
-  private lazy val location: String = {
-    // RAM-backed scratch when present (the streamScratch placement
-    // rule): every micro-batch sink commit, stage-table write and
-    // compaction rewrite pays file-create + rename + fsync here, which
-    // tmpfs makes free. This database is LOCAL bench/test scratch by
-    // contract — a production pipeline's sinks are real tables on
-    // durable shared storage — and the shutdown hook bounds the
-    // footprint to the JVM's lifetime either way.
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val d =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm))
-        java.nio.file.Files.createTempDirectory(shm, s"graft_scratch_$pid")
-      else java.nio.file.Files.createTempDirectory(s"graft_scratch_$pid")
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d.toFile): Unit))
-    d.toString
-  }
+  private lazy val location: String = graft.streaming.Drain.scratchDir("scratch_db")
 
   /** Ensure the scratch database exists; returns its name. */
   def ensure(s: SparkSession): String = synchronized {

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.LongType
 
 import graft.keys.SurrogateKeys
 import graft.sources.Tables
+import graft.streaming.Drain
 
 /** Remaining SURVEY.md §2 relational operators not covered by CoreQueries:
   * O1 (LIMIT/top-k), S8-full (raw SQL over registered views), P2
@@ -131,8 +132,7 @@ object RelationalExtras {
     * of the sink. The output rows are a pure function of (static
     * standing state, the batch's keys' rows), so an at-least-once
     * replay rewrites identical rows. Union over batches == the
-    * one-shot q138 apply == batch q57, verbatim oracle. Test hooks as
-    * in the DedupQueries drains.
+    * one-shot q138 apply == batch q57, verbatim oracle.
     *
     * PRECONDITION (round-11 advice): the drops must carry a FULL
     * snapshot — every standing key appears in some micro-batch. History
@@ -146,54 +146,26 @@ object RelationalExtras {
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
     scd2StateTable(s, dir) // the standing dimension exists pre-stream
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q139_src"),
-        DedupQueries.streamScratch("graft_q139_ckpt")))
-    val outTable = JvmScratch.tableName("stream_scd2_out")
-    try {
-      if (!resume) {
-        val snap2 = Tables.customer(s, dir)
-          .select("c_custkey", "c_acctbal", "c_mktsegment")
-          .withColumn("c_acctbal",
-            when(col("c_custkey") % 10 === 0, col("c_acctbal") + 100.0)
-              .otherwise(col("c_acctbal")))
-        DedupQueries.stageDropsCached(s, dir, "q139", "customer.parquet", srcDir, 3)(
-          i => snap2.filter(pmod(col("c_custkey"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_scd2_out")
-        createBatchSink(s, outTable, Seq(
-          "c_custkey" -> "bigint", "c_acctbal" -> "double",
-          "c_mktsegment" -> "string", "version" -> "bigint",
-          "effective_from_snap" -> "bigint", "effective_to_snap" -> "bigint",
-          "is_current" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            val keys = batch.select("c_custkey")
-            val standing = scd2StateTable(ss, dir)
-              .join(keys, Seq("c_custkey"), "left_semi")
-            scd2Apply(standing, batch, 2L)
-              .withColumn("c_acctbal", col("c_acctbal").cast("double"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      s.table(outTable).select("c_custkey", "c_acctbal", "c_mktsegment",
-        "version", "effective_from_snap", "effective_to_snap", "is_current")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_scd2_out",
+      "c_custkey" -> "bigint", "c_acctbal" -> "double",
+      "c_mktsegment" -> "string", "version" -> "bigint",
+      "effective_from_snap" -> "bigint", "effective_to_snap" -> "bigint",
+      "is_current" -> "bigint")
+    val snap2 = Tables.customer(s, dir)
+      .select("c_custkey", "c_acctbal", "c_mktsegment")
+      .withColumn("c_acctbal",
+        when(col("c_custkey") % 10 === 0, col("c_acctbal") + 100.0)
+          .otherwise(col("c_acctbal")))
+    Drain.drops(s, dir, "q139", "customer.parquet", Seq(out), chaos, scratch, resume)(
+      i => snap2.filter(pmod(col("c_custkey"), lit(3)) === i)) { (batch, batchId) =>
+      val standing = scd2StateTable(batch.sparkSession, dir)
+        .join(batch.select("c_custkey"), Seq("c_custkey"), "left_semi")
+      Drain.shard(scd2Apply(standing, batch, 2L)
+        .withColumn("c_acctbal", col("c_acctbal").cast("double")), out.table, batchId)
+    }
+    s.table(out.table).select("c_custkey", "c_acctbal", "c_mktsegment",
+      "version", "effective_from_snap", "effective_to_snap", "is_current")
   }
 
   /** The persisted SCD2 STATE after the first load — q138's maintained

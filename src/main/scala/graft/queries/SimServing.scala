@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
 import graft.sources.Tables
+import graft.streaming.Drain
 
 /** The durable ANN serving stack (q124/q125/q126): codebook + bucketed block-index artifacts, the size-gated top-K serving routes (broadcast join-back vs in-join cosine on the bulk route), the streaming serve drain, index probes, the serving oracle, and the delta-broadcast gates.
   *
@@ -139,50 +140,23 @@ trait SimServing { self: SimilarityQueries.type =>
     * overwrites its own batch_id partition (replay-idempotent: the
     * answer to a query is a pure function of the query and the
     * standing index). Final table == batch q124 under the verbatim
-    * oracle. Test hooks as in [[graft.queries.DedupQueries]]. */
+    * oracle. */
   private[graft] def streamAnnServe(s: SparkSession, dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
+    // build/attach the index and codebook BEFORE the drain (the
+    // standing artifacts exist before a serving stream starts)
+    semBlockIndexTable(s, dir)
+    semCodebookTable(s, dir)
     val queries = Tables.embeddings(s, dir).filter(col("vec_id") % 10 === 7)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q126_src"),
-        DedupQueries.streamScratch("graft_q126_ckpt")))
-    val outTable = JvmScratch.tableName("stream_ann_out")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q126", "embeddings.parquet", srcDir, 3)(
-          i => queries.filter(pmod(col("vec_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_ann_out")
-        createBatchSink(s, outTable, Seq("q_id" -> "bigint",
-          "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double"))
-      }
-      // build/attach the index and codebook BEFORE the drain (the
-      // standing artifacts exist before a serving stream starts)
-      semBlockIndexTable(s, dir)
-      semCodebookTable(s, dir)
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val ss = batch.sparkSession
-            semIndexTopKOf(ss, dir, batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      s.table(outTable).select("q_id", "rank", "c_id", "cosine")
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_ann_out", "q_id" -> "bigint",
+      "rank" -> "bigint", "c_id" -> "bigint", "cosine" -> "double")
+    Drain.drops(s, dir, "q126", "embeddings.parquet", Seq(out), chaos, scratch, resume)(
+      i => queries.filter(pmod(col("vec_id"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(semIndexTopKOf(batch.sparkSession, dir, batch), out.table, batchId)
+    }
+    s.table(out.table).select("q_id", "rank", "c_id", "cosine")
   }
 
   /** The shared keeper tail of the durable-probe queries (q112/q115):

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.CrossEngine._
 import graft.sources.Tables
+import graft.streaming.Drain
 
 /** Mergeable-sketch aggregation (brief: "a novel sketch"). A count-min
   * sketch is the 100-TB frequency-estimation pattern: each partition
@@ -85,69 +86,35 @@ object SketchQueries {
        |  nonzero_regs
        |FROM agg""".stripMargin
 
-  /** q121's body: register maintenance live. Mirrors the
-    * [[DedupQueries]] drain shape (checkpointed AvailableNow,
-    * maxFilesPerTrigger=1, batch_id-partitioned idempotent sink); the
-    * per-batch work is just [[hllRegisters]] — sketching IS the only
-    * state a streaming statistics job needs to write.
-    *
-    * Test hooks as in DedupQueries.streamIncrementalDedup: `chaos` runs
-    * after a batch's write but before its checkpoint commit (throwing
-    * simulates a crash that forces an at-least-once replay); `scratch`
-    * pins the staging/checkpoint dirs; `resume` skips re-staging so a
-    * restart drains the SAME checkpoint. */
+  /** q121's body: register maintenance live — the
+    * [[graft.streaming.Drain.drops]] shape with the per-batch work just
+    * [[hllRegisters]]: sketching IS the only state a streaming
+    * statistics job needs to write. */
   private[queries] def streamHllMaintain(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
     // stage the NORMALIZED events (ts as a real timestamp): the staged
     // copy then round-trips through parquet without the nano-long shape
     val ev = Tables.events(s, dir).select("event_id", "event_type", "user_id", "ts")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q121_src"),
-        DedupQueries.streamScratch("graft_q121_ckpt")))
-    val outTable = JvmScratch.tableName("stream_hll_regs")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q121", "events.parquet", srcDir, 3)(
-          i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hll_regs")
-        createBatchSink(s, outTable, Seq(
-          "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            hllRegisters(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      // post-drain compaction, BATCH-PRESERVING (round-12 advice): the
-      // HLL retraction contract is shard-grained — drop a deleted
-      // ingest batch's register shard and re-max — and max-merge is
-      // not invertible, so folding the shards to one batch_id=-1
-      // generation would forfeit that capability on the real sink.
-      // Each batch's fragments rewrite to one file; the shard grain
-      // (and with it both replay idempotency and retraction) survives.
-      graft.sources.DurableIndex.compactSinkBatched(s, outTable): Unit
-      val merged = s.table(outTable)
-        .groupBy("event_type", "bucket").agg(max(col("reg")).as("reg"))
-      hllEstimateOf(s, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_hll_regs",
+      "event_type" -> "string", "bucket" -> "bigint", "reg" -> "int")
+    Drain.drops(s, dir, "q121", "events.parquet", Seq(out), chaos, scratch, resume)(
+      i => ev.filter(pmod(col("event_id"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(hllRegisters(batch), out.table, batchId)
+    }
+    // post-drain compaction, BATCH-PRESERVING (round-12 advice): the
+    // HLL retraction contract is shard-grained — drop a deleted
+    // ingest batch's register shard and re-max — and max-merge is
+    // not invertible, so folding the shards to one batch_id=-1
+    // generation would forfeit that capability on the real sink.
+    // Each batch's fragments rewrite to one file; the shard grain
+    // (and with it both replay idempotency and retraction) survives.
+    graft.sources.DurableIndex.compactSinkBatched(s, out.table): Unit
+    val merged = s.table(out.table)
+      .groupBy("event_type", "bucket").agg(max(col("reg")).as("reg"))
+    hllEstimateOf(s, merged)
   }
 
   /** The q51 estimate over a (possibly merged) register table: dense
@@ -497,61 +464,33 @@ object SketchQueries {
     * delta or double-run on a replay. Summed shards == the one-shot
     * delta counts exactly (the drops partition docs; trigram counts
     * add across docs), so the result == q135 == batch q117: verbatim
-    * oracle. Test hooks as in [[streamHllMaintain]]. */
+    * oracle. */
   private[queries] def streamHeavyHitters(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false,
       compact: Boolean = true): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
     val docs = Tables.documents(s, dir)
     // the standing artifact exists before a maintenance stream starts
     hhStoreTable(s, dir)
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q144_src"),
-        DedupQueries.streamScratch("graft_q144_ckpt")))
-    val outTable = JvmScratch.tableName("stream_hh_counts")
-    try {
-      if (!resume) {
-        val delta = docs.filter(col("doc_id") % 10 === 7)
-          .select("doc_id", "text")
-        DedupQueries.stageDropsCached(s, dir, "q144", "documents.parquet", srcDir, 3)(
-          i => delta.filter(pmod(col("doc_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hh_counts")
-        createBatchSink(s, outTable, Seq(
-          "gram" -> "string", "dcnt" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            trigramOcc(batch).groupBy("gram")
-              .agg(count(lit(1)).as("dcnt"))
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      // post-drain (checkpoint barrier passed): fold the per-batch
-      // count-shard fragments; the sum-merge below is row-order-blind,
-      // so the rewrite is invisible to it (DurableArtifactsSpec)
-      if (compact)
-        graft.sources.DurableIndex.compactSink(s, outTable): Unit
-      val merged = s.table(outTable)
-        .groupBy("gram").agg(sum(col("dcnt")).as("dcnt"))
-      hhMaintainFromCounts(s, docs.filter(col("doc_id") % 10 =!= 7),
-        merged, hhStoreTable(s, dir))
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_hh_counts",
+      "gram" -> "string", "dcnt" -> "bigint")
+    val delta = docs.filter(col("doc_id") % 10 === 7).select("doc_id", "text")
+    Drain.drops(s, dir, "q144", "documents.parquet", Seq(out), chaos, scratch, resume)(
+      i => delta.filter(pmod(col("doc_id"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(trigramOcc(batch).groupBy("gram").agg(count(lit(1)).as("dcnt")),
+        out.table, batchId)
+    }
+    // post-drain (checkpoint barrier passed): fold the per-batch
+    // count-shard fragments; the sum-merge below is row-order-blind,
+    // so the rewrite is invisible to it (DurableArtifactsSpec)
+    if (compact)
+      graft.sources.DurableIndex.compactSink(s, out.table): Unit
+    val merged = s.table(out.table)
+      .groupBy("gram").agg(sum(col("dcnt")).as("dcnt"))
+    hhMaintainFromCounts(s, docs.filter(col("doc_id") % 10 =!= 7),
+      merged, hhStoreTable(s, dir))
   }
 
   /** q56's oracle, shared verbatim by q140/q141: the maintained bin
@@ -610,50 +549,22 @@ object SketchQueries {
   /** q141's body: [[streamHllMaintain]]'s drain shape with the
     * per-batch work swapped for [[histBins]] — bin shards are a pure
     * function of the batch, so the batch_id dynamic overwrite makes
-    * replays idempotent; merge on read = cellwise SUM. Test hooks as
-    * in the other drains. */
+    * replays idempotent; merge on read = cellwise SUM. */
   private[queries] def streamHistMaintain(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
     val o = Tables.orders(s, dir).select("o_orderkey", "o_totalprice")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q141_src"),
-        DedupQueries.streamScratch("graft_q141_ckpt")))
-    val outTable = JvmScratch.tableName("stream_hist_bins")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q141", "orders.parquet", srcDir, 3)(
-          i => o.filter(pmod(col("o_orderkey"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_hist_bins")
-        createBatchSink(s, outTable, Seq("bin" -> "bigint", "c" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            histBins(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      graft.sources.DurableIndex.compactSink(s, outTable): Unit
-      val merged = s.table(outTable)
-        .groupBy("bin").agg(sum(col("c")).as("c"))
-      histQuantilesOf(s, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_hist_bins", "bin" -> "bigint", "c" -> "bigint")
+    Drain.drops(s, dir, "q141", "orders.parquet", Seq(out), chaos, scratch, resume)(
+      i => o.filter(pmod(col("o_orderkey"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(histBins(batch), out.table, batchId)
+    }
+    graft.sources.DurableIndex.compactSink(s, out.table): Unit
+    val merged = s.table(out.table)
+      .groupBy("bin").agg(sum(col("c")).as("c"))
+    histQuantilesOf(s, merged)
   }
 
   /** q46's oracle, shared verbatim by q132/q133: the maintained grids
@@ -681,55 +592,26 @@ object SketchQueries {
   private val cmsOracle: String = cmsOracleFor("")
 
   /** q133's body: CMS grid maintenance live — [[streamHllMaintain]]'s
-    * drain shape (checkpointed AvailableNow, maxFilesPerTrigger=1,
-    * batch_id-partitioned idempotent sink) with the per-batch work
-    * swapped for [[cmsCells]]. Grid shards are a pure function of the
-    * batch, so an at-least-once replay dynamic-overwrites identical
-    * rows; merge on read = cellwise SUM over all partitions. Test hooks
-    * as in [[streamHllMaintain]]. */
+    * drain shape with the per-batch work swapped for [[cmsCells]]. Grid
+    * shards are a pure function of the batch, so an at-least-once
+    * replay dynamic-overwrites identical rows; merge on read = cellwise
+    * SUM over all partitions. */
   private[queries] def streamCmsMaintain(s: org.apache.spark.sql.SparkSession,
       dir: String,
       chaos: Long => Unit = _ => (),
       scratch: Option[(String, String)] = None,
       resume: Boolean = false): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import DedupQueries.{createBatchSink, rmQuietly, withStreamConfs}
     val ev = Tables.events(s, dir).select("event_id", "user_id")
-    val (srcDir, ckpt) = scratch.getOrElse(
-      (DedupQueries.streamScratch("graft_q133_src"),
-        DedupQueries.streamScratch("graft_q133_ckpt")))
-    val outTable = JvmScratch.tableName("stream_cms_grid")
-    try {
-      if (!resume) {
-        DedupQueries.stageDropsCached(s, dir, "q133", "events.parquet", srcDir, 3)(
-          i => ev.filter(pmod(col("event_id"), lit(3)) === i))
-        JvmScratch.resetTable(s, "stream_cms_grid")
-        createBatchSink(s, outTable, Seq(
-          "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint"))
-      }
-      val schema = s.read.parquet(srcDir).schema
-      withStreamConfs(s) {
-        val q = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1).parquet(srcDir)
-          .writeStream.outputMode(OutputMode.Append())
-          .option("checkpointLocation", ckpt)
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            cmsCells(batch)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").insertInto(outTable)
-            chaos(batchId)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
-      s.catalog.refreshTable(outTable)
-      graft.sources.DurableIndex.compactSink(s, outTable): Unit
-      val merged = s.table(outTable)
-        .groupBy("d", "cell").agg(sum(col("c")).as("c"))
-      cmsEstimateOf(s, dir, merged)
-    } finally if (scratch.isEmpty) rmQuietly(srcDir, ckpt)
+    val out = Drain.batchSink(s, "stream_cms_grid",
+      "d" -> "bigint", "cell" -> "bigint", "c" -> "bigint")
+    Drain.drops(s, dir, "q133", "events.parquet", Seq(out), chaos, scratch, resume)(
+      i => ev.filter(pmod(col("event_id"), lit(3)) === i)) { (batch, batchId) =>
+      Drain.shard(cmsCells(batch), out.table, batchId)
+    }
+    graft.sources.DurableIndex.compactSink(s, out.table): Unit
+    val merged = s.table(out.table)
+      .groupBy("d", "cell").agg(sum(col("c")).as("c"))
+    cmsEstimateOf(s, dir, merged)
   }
 
   val all: Seq[QueryDef] = Seq(

@@ -7,7 +7,7 @@ import graft.sources.Tables
 import graft.streaming.StreamingOps
 
 /** Declared queries over the `events` table: Structured Streaming runs
-  * (drained with Trigger.AvailableNow so a batch oracle can check them
+  * (drained under AvailableNow so a batch oracle can check them
   * exactly) plus the equivalent batch sessionization.
   *
   * Timestamp discipline: events.ts has nanosecond precision in parquet;

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.sources.Tables
 
@@ -17,7 +17,7 @@ case class SessionRow(user_id: Long, session_start: java.sql.Timestamp,
   *
   * The reference is batch-only (SURVEY §2.9) — these are the
   * north-star streaming extensions: the same file data processed through
-  * `readStream` with `Trigger.AvailableNow`, so each call drains the
+  * `readStream` and drained by [[Drain.run]], so each call drains the
   * source as one bounded run and the result is comparable to a batch
   * oracle. At scale the identical code runs continuously against an
   * arriving-file or Kafka source; only the trigger changes.
@@ -39,15 +39,8 @@ object StreamingOps {
     *    one-off batch read, then [[Tables.normalizeEventTs]] the stream. */
   private def eventStream(spark: SparkSession, dir: String): DataFrame = {
     val src = java.nio.file.Paths.get(dir, "events.parquet")
-    // RAM-backed when present (the streamScratch placement rule); the
-    // stamp check below re-stages after a reboot clears tmpfs
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    val stageBase =
-      if (java.nio.file.Files.isDirectory(shm) &&
-          java.nio.file.Files.isWritable(shm)) shm
-      else java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
-    val stageDir = stageBase.resolve(
-      s"graft_stream_src_${Integer.toHexString(dir.hashCode)}")
+    // one copy per source for the JVM's lifetime, under the scratch root
+    val stageDir = Drain.root.resolve(s"events_${Integer.toHexString(dir.hashCode)}")
     java.nio.file.Files.createDirectories(stageDir)
     // freshness check on a per-file (name, size, mtime) stamp of the
     // SOURCE, recorded at copy time: re-stage only when the source
@@ -103,50 +96,14 @@ object StreamingOps {
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
 
-  /** Hourly tumbling-window counts per event type via readStream +
-    * watermark + windowed groupBy, in the shape that survives CONTINUOUS
-    * operation (round-3 verdict: the old Complete-mode memory sink
-    * re-emits the whole result each trigger and lives on the driver —
-    * fine for a bounded drain, wrong at scale):
-    *
-    *   - Append output mode: each window row is emitted exactly once,
-    *     when the watermark closes it, and its state is evicted;
-    *   - foreachBatch -> managed-table append: the sink grows on disk,
-    *     not in driver memory, and restarts resume from the checkpoint.
-    *
-    * Append mode meets one bounded-drain reality: the watermark only
-    * advances on arriving data, so the trailing windows are still open
-    * when the source drains and would never emit. A live stream closes
-    * them when later events arrive — so the drain does exactly that:
-    * after the first run, a sentinel event 3h past max(ts) lands in the
-    * source directory and the SAME checkpointed query restarts, which
-    * pushes the watermark past every real window and flushes them. The
-    * sentinel's own window stays open forever and is never emitted, so
-    * the table equals the batch aggregate exactly. */
-  /** Stateful-query partition sizing shared by every stateful stream
-    * here: shuffle partitions beyond the state volume are pure
-    * per-micro-batch state-store commit overhead (measured 72s -> 31s
-    * at sf0.1 going 32 -> 4 on the interval join). At real volumes
-    * raise SPARK_GRAFT_STREAM_PARTITIONS instead. */
-  private def withStreamPartitions[T](spark: SparkSession)(f: => T): T = {
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try f
-    finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
-  }
-
-  /** Fresh private staging dir with a copy of events.parquet (the shared
-    * staging dir must never receive a sentinel). The second element is
-    * the path to batch-read the staged data from — the stage dir itself,
-    * valid for both single-file and part-directory sources; at read time
-    * it holds only the copy, never a sentinel. */
-  private def stageEventsFresh(dir: String, tag: String): (String, String) = {
-    // RAM-backed when present (the streamScratch placement rule)
-    val stageDir = java.nio.file.Paths.get(
-      graft.queries.DedupQueries.streamScratch(s"graft_${tag}_src"))
-    copyEventsInto(dir, stageDir)
-    (stageDir.toString, stageDir.toString)
+  /** A fresh private staging dir holding a copy of events.parquet (the
+    * shared [[eventStream]] copy must never receive a sentinel); valid
+    * for both single-file and part-directory sources. The caller
+    * removes it. */
+  private def stageEventsFresh(dir: String, tag: String): String = {
+    val stageDir = Drain.scratchDir(s"${tag}_src")
+    copyEventsInto(dir, java.nio.file.Paths.get(stageDir))
+    stageDir
   }
 
   /** Drop + location-clean a per-JVM scratch managed table; returns its
@@ -162,8 +119,8 @@ object StreamingOps {
     * sentinel honors whichever shape the staged schema has.
     * `overrides` mark the sentinel so results can exclude it. */
   private def writeSentinel(spark: SparkSession, stageDir: String,
-      staged: String, overrides: Map[String, org.apache.spark.sql.Column]): Unit = {
-    val raw = spark.read.parquet(staged)
+      overrides: Map[String, org.apache.spark.sql.Column]): Unit = {
+    val raw = spark.read.parquet(stageDir)
     // max(ts) + 3h computed wholly in Catalyst (one-row agg cross-joined
     // back), so the sentinel keeps whichever raw encoding the staged
     // files carry — nano-count long, TIMESTAMP_NTZ, or TimestampType —
@@ -190,44 +147,55 @@ object StreamingOps {
       .write.mode("append").parquet(stageDir)
   }
 
-  /** AvailableNow drain through a checkpointed foreachBatch append. */
-  private def drainToTable(df: DataFrame, ckpt: String, table: String): Unit = {
-    val q = df.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.format("parquet").mode("append").saveAsTable(table)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+  /** Drain `df` into `table` by plain appends, on checkpoint `ckpt`. */
+  private def drainToTable(df: DataFrame, ckpt: String, table: String): Unit =
+    Drain.run(df, ckpt) { (batch, _) =>
+      batch.write.format("parquet").mode("append").saveAsTable(table)
+    }
 
+  /** Hourly tumbling-window counts per event type via readStream +
+    * watermark + windowed groupBy, in the shape that survives CONTINUOUS
+    * operation (round-3 verdict: the old Complete-mode memory sink
+    * re-emits the whole result each trigger and lives on the driver —
+    * fine for a bounded drain, wrong at scale):
+    *
+    *   - Append output mode: each window row is emitted exactly once,
+    *     when the watermark closes it, and its state is evicted;
+    *   - foreachBatch -> managed-table append: the sink grows on disk,
+    *     not in driver memory, and restarts resume from the checkpoint.
+    *
+    * Append mode meets one bounded-drain reality: the watermark only
+    * advances on arriving data, so the trailing windows are still open
+    * when the source drains and would never emit. A live stream closes
+    * them when later events arrive — so the drain does exactly that:
+    * after the first run, a sentinel event 3h past max(ts) lands in the
+    * source directory and the SAME checkpointed query restarts, which
+    * pushes the watermark past every real window and flushes them. The
+    * sentinel's own window stays open forever and is never emitted, so
+    * the table equals the batch aggregate exactly. */
   def hourlyCounts(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { hourlyCountsInner(spark, dir) }
+    Drain.withStreamConfs(spark) {
+      val table = freshTable(spark, "stream_hourly")
+      val stageDir = stageEventsFresh(dir, "q34")
+      val ckpt = Drain.scratchDir("q34_ckpt")
+      try {
+        val rawSchema = spark.read.parquet(stageDir).schema
+        val agg = Tables.normalizeEventTs(
+            spark.readStream.schema(rawSchema).parquet(stageDir))
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"),
+            sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
+          .select(col("window.start").as("window_start"), col("event_type"),
+            col("n"), col("total_value"))
 
-  private def hourlyCountsInner(spark: SparkSession, dir: String): DataFrame = {
-    val table = freshTable(spark, "stream_hourly")
-    val (stageDir, staged) = stageEventsFresh(dir, "q34")
-    val ckpt = graft.queries.DedupQueries.streamScratch("graft_q34_ckpt")
+        drainToTable(agg, ckpt, table) // emits every window the data closed
+        writeSentinel(spark, stageDir, Map("event_type" -> lit("graft_sentinel")))
+        drainToTable(agg, ckpt, table) // watermark jumps -> trailing flush
+      } finally Drain.rmQuietly(stageDir, ckpt)
 
-    val rawSchema = spark.read.parquet(staged).schema
-    val agg = Tables.normalizeEventTs(
-        spark.readStream.schema(rawSchema).parquet(stageDir))
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-      .select(col("window.start").as("window_start"), col("event_type"),
-        col("n"), col("total_value"))
-
-    drainToTable(agg, ckpt, table) // emits every window the data closed
-    writeSentinel(spark, stageDir, staged,
-      Map("event_type" -> lit("graft_sentinel")))
-    drainToTable(agg, ckpt, table) // watermark jumps -> trailing flush
-
-    spark.table(table).filter(col("event_type") =!= "graft_sentinel")
-  }
+      spark.table(table).filter(col("event_type") =!= "graft_sentinel")
+    }
 
   /** Stream-static enrichment join: each micro-batch of the event stream
     * joins a STATIC dimension table (nation, keyed by user_id % 25) —
@@ -240,16 +208,16 @@ object StreamingOps {
     * enriched table is aggregated in batch and equals the pure-batch
     * join oracle regardless of how the source was micro-batched. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) {
+    Drain.withStreamConfs(spark) {
       val table = freshTable(spark, "stream_dim")
-      val ckpt = graft.queries.DedupQueries.streamScratch("graft_q67_ckpt")
+      val ckpt = Drain.scratchDir("q67_ckpt")
       val dim = Tables.nation(spark, dir)
         .select(col("n_nationkey").cast("long").as("nk"), col("n_name"))
       val enriched = eventStream(spark, dir)
         .select(col("event_id"), col("user_id"))
         .join(broadcast(dim), (col("user_id") % 25) === col("nk"))
         .select(col("event_id"), col("user_id"), col("n_name"))
-      drainToTable(enriched, ckpt, table)
+      try drainToTable(enriched, ckpt, table) finally Drain.rmQuietly(ckpt)
       spark.table(table).groupBy("n_name")
         .agg(count(lit(1)).as("n_events"),
           countDistinct(col("user_id")).as("n_users"))
@@ -262,51 +230,38 @@ object StreamingOps {
     * imposes precisely so this runs unbounded at scale. Drained with
     * AvailableNow the emitted matches equal the batch interval join
     * (the oracle). */
-  def attributionJoin(spark: SparkSession, dir: String): DataFrame = {
-    // Stateful-query partition sizing: shuffle partitions = state-store
-    // count, and a stream-stream interval join commits FOUR stores per
-    // partition per micro-batch — with small per-key state, 32
-    // partitions are pure commit overhead (measured 72s -> 31s at
-    // sf0.1 going 32 -> 4). Size to state volume: small here; at
-    // billions of events raise SPARK_GRAFT_STREAM_PARTITIONS instead.
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
-    val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", streamParts)
-    try attributionJoinInner(spark, dir)
-    finally spark.conf.set("spark.sql.shuffle.partitions", oldParts)
-  }
+  def attributionJoin(spark: SparkSession, dir: String): DataFrame =
+    Drain.withStreamConfs(spark) {
+      val e = eventStream(spark, dir)
+        .select(col("event_id"), col("user_id"),
+          date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
+      val clicks = e.filter(col("event_type") === "click")
+        .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
+          col("event_id").as("click_id"))
+        .withWatermark("click_ts", "1 hour")
+      val buys = e.filter(col("event_type") === "purchase")
+        .select(col("user_id").as("b_user"), col("ts").as("buy_ts"),
+          col("event_id").as("buy_id"))
+        .withWatermark("buy_ts", "1 hour")
 
-  private def attributionJoinInner(spark: SparkSession, dir: String): DataFrame = {
-    val e = eventStream(spark, dir)
-      .select(col("event_id"), col("user_id"),
-        date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
-    val clicks = e.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-      .withWatermark("click_ts", "1 hour")
-    val buys = e.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("b_user"), col("ts").as("buy_ts"),
-        col("event_id").as("buy_id"))
-      .withWatermark("buy_ts", "1 hour")
+      val joined = clicks.join(buys, expr(
+        """c_user = b_user AND
+          |buy_ts >= click_ts AND
+          |buy_ts <= click_ts + interval 30 minutes""".stripMargin))
+        .select(col("c_user").as("user_id"), col("click_id"), col("buy_id"),
+          col("click_ts"), col("buy_ts"))
 
-    val joined = clicks.join(buys, expr(
-      """c_user = b_user AND
-        |buy_ts >= click_ts AND
-        |buy_ts <= click_ts + interval 30 minutes""".stripMargin))
-      .select(col("c_user").as("user_id"), col("click_id"), col("buy_id"),
-        col("click_ts"), col("buy_ts"))
-
-    // Checkpointed foreachBatch append to a managed table (q34 shape):
-    // the sink grows on disk, not in driver memory, and a restart resumes
-    // from the checkpoint — the form that survives unbounded operation.
-    // No sentinel restart is needed: an inner stream-stream join emits
-    // each match as soon as both sides arrive (the watermark only gates
-    // STATE EVICTION), so the single AvailableNow drain emits every match.
-    val table = freshTable(spark, "stream_attr")
-    val ckpt = graft.queries.DedupQueries.streamScratch("graft_q47_ckpt")
-    drainToTable(joined, ckpt, table)
-    spark.table(table)
-  }
+      // Checkpointed foreachBatch append to a managed table (q34 shape):
+      // the sink grows on disk, not in driver memory, and a restart resumes
+      // from the checkpoint — the form that survives unbounded operation.
+      // No sentinel restart is needed: an inner stream-stream join emits
+      // each match as soon as both sides arrive (the watermark only gates
+      // STATE EVICTION), so the single AvailableNow drain emits every match.
+      val table = freshTable(spark, "stream_attr")
+      val ckpt = Drain.scratchDir("q47_ckpt")
+      try drainToTable(joined, ckpt, table) finally Drain.rmQuietly(ckpt)
+      spark.table(table)
+    }
 
   /** Streaming deduplication: dropDuplicates on the (user_id,
     * event_type) key over the bounded drain — emits exactly the distinct
@@ -315,23 +270,21 @@ object StreamingOps {
     * batch DISTINCT). At scale the same call takes a watermark so the
     * key state is evictable. */
   def streamingDedup(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { streamingDedupInner(spark, dir) }
+    Drain.withStreamConfs(spark) {
+      val dedup = eventStream(spark, dir)
+        .select(col("user_id"), col("event_type"))
+        .dropDuplicates("user_id", "event_type")
 
-  private def streamingDedupInner(spark: SparkSession, dir: String): DataFrame = {
-    val dedup = eventStream(spark, dir)
-      .select(col("user_id"), col("event_type"))
-      .dropDuplicates("user_id", "event_type")
-
-    // Checkpointed foreachBatch append to a managed table (q34 shape).
-    // dropDuplicates emits a key the first time it appears, so the single
-    // AvailableNow drain emits the complete distinct key set — no
-    // sentinel restart needed (the keep-all state, evictable only with a
-    // watermark, is the documented at-scale caveat above).
-    val table = freshTable(spark, "stream_dedup")
-    val ckpt = graft.queries.DedupQueries.streamScratch("graft_q48_ckpt")
-    drainToTable(dedup, ckpt, table)
-    spark.table(table)
-  }
+      // Checkpointed foreachBatch append to a managed table (q34 shape).
+      // dropDuplicates emits a key the first time it appears, so the single
+      // AvailableNow drain emits the complete distinct key set — no
+      // sentinel restart needed (the keep-all state, evictable only with a
+      // watermark, is the documented at-scale caveat above).
+      val table = freshTable(spark, "stream_dedup")
+      val ckpt = Drain.scratchDir("q48_ckpt")
+      try drainToTable(dedup, ckpt, table) finally Drain.rmQuietly(ckpt)
+      spark.table(table)
+    }
 
   /** Streaming ELT through foreachBatch (SURVEY §2.9's named upgrade
     * path): each micro-batch runs the SAME batch transform and appends
@@ -342,17 +295,13 @@ object StreamingOps {
     * batches (the declared, oracle-checked property). */
   def foreachBatchToTable(spark: SparkSession, dir: String): DataFrame = {
     val table = freshTable(spark, "stream_events")
-
-    val q = eventStream(spark, dir).writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch // the same enrichment a batch job would run
-          .withColumn("event_date", to_date(col("ts")))
-          .withColumn("value_d", col("value").cast("decimal(18,2)"))
-          .write.format("parquet").mode("append").saveAsTable(table)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val ckpt = Drain.scratchDir("q45_ckpt")
+    try Drain.run(eventStream(spark, dir), ckpt) { (batch, _) =>
+      batch // the same enrichment a batch job would run
+        .withColumn("event_date", to_date(col("ts")))
+        .withColumn("value_d", col("value").cast("decimal(18,2)"))
+        .write.format("parquet").mode("append").saveAsTable(table)
+    } finally Drain.rmQuietly(ckpt)
 
     spark.table(table)
       .groupBy(col("event_date"), col("event_type"))
@@ -381,58 +330,58 @@ object StreamingOps {
     *     bounded drain (a live stream's later data does this for free).
     */
   def sessionize(spark: SparkSession, dir: String): DataFrame =
-    withStreamPartitions(spark) { sessionizeInner(spark, dir) }
+    Drain.withStreamConfs(spark) {
+      import spark.implicits._
+      val table = freshTable(spark, "stream_sessions")
+      val stageDir = stageEventsFresh(dir, "q36")
+      val ckpt = Drain.scratchDir("q36_ckpt")
+      val gapMs = 30L * 60 * 1000
 
-  private def sessionizeInner(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val table = freshTable(spark, "stream_sessions")
-    val (stageDir, staged) = stageEventsFresh(dir, "q36")
-    val ckpt = graft.queries.DedupQueries.streamScratch("graft_q36_ckpt")
-    val gapMs = 30L * 60 * 1000
-
-    val rawSchema = spark.read.parquet(staged).schema
-    // ms truncation: the parquet timestamps carry nanoseconds, which
-    // Spark truncates to microseconds while the DuckDB oracle keeps —
-    // session boundaries must come from a precision both engines share.
-    val sessions = Tables.normalizeEventTs(
-        spark.readStream.schema(rawSchema).parquet(stageDir))
-      .select(col("user_id"),
-        date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
-      .withWatermark("ts", "1 hour")
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[SessionRow, SessionRow](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (uid: Long, evs: Iterator[Ev], state: GroupState[SessionRow]) =>
-          if (state.hasTimedOut) {
-            // watermark passed the open session's close boundary: flush
-            val out = state.getOption.iterator.toList
-            state.remove()
-            out.iterator
-          } else {
-            val sorted = evs.toList.sortBy(e => (e.ts.getTime, e.event_type))
-            val out = scala.collection.mutable.ListBuffer[SessionRow]()
-            var cur = state.getOption.orNull
-            sorted.foreach { e =>
-              if (cur == null) cur = SessionRow(uid, e.ts, e.ts, 1L)
-              else if (e.ts.getTime - cur.session_end.getTime <= gapMs)
-                cur = cur.copy(
-                  session_end =
-                    if (e.ts.getTime > cur.session_end.getTime) e.ts
-                    else cur.session_end,
-                  n_events = cur.n_events + 1)
-              else { out += cur; cur = SessionRow(uid, e.ts, e.ts, 1L) }
-            }
-            state.update(cur)
-            state.setTimeoutTimestamp(cur.session_end.getTime + gapMs + 1)
-            out.iterator
+      try {
+        val rawSchema = spark.read.parquet(stageDir).schema
+        // ms truncation: the parquet timestamps carry nanoseconds, which
+        // Spark truncates to microseconds while the DuckDB oracle keeps —
+        // session boundaries must come from a precision both engines share.
+        val sessions = Tables.normalizeEventTs(
+            spark.readStream.schema(rawSchema).parquet(stageDir))
+          .select(col("user_id"),
+            date_trunc("millisecond", col("ts")).as("ts"), col("event_type"))
+          .withWatermark("ts", "1 hour")
+          .as[Ev]
+          .groupByKey(_.user_id)
+          .flatMapGroupsWithState[SessionRow, SessionRow](
+            OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
+            (uid: Long, evs: Iterator[Ev], state: GroupState[SessionRow]) =>
+              if (state.hasTimedOut) {
+                // watermark passed the open session's close boundary: flush
+                val out = state.getOption.iterator.toList
+                state.remove()
+                out.iterator
+              } else {
+                val sorted = evs.toList.sortBy(e => (e.ts.getTime, e.event_type))
+                val out = scala.collection.mutable.ListBuffer[SessionRow]()
+                var cur = state.getOption.orNull
+                sorted.foreach { e =>
+                  if (cur == null) cur = SessionRow(uid, e.ts, e.ts, 1L)
+                  else if (e.ts.getTime - cur.session_end.getTime <= gapMs)
+                    cur = cur.copy(
+                      session_end =
+                        if (e.ts.getTime > cur.session_end.getTime) e.ts
+                        else cur.session_end,
+                      n_events = cur.n_events + 1)
+                  else { out += cur; cur = SessionRow(uid, e.ts, e.ts, 1L) }
+                }
+                state.update(cur)
+                state.setTimeoutTimestamp(cur.session_end.getTime + gapMs + 1)
+                out.iterator
+              }
           }
-      }
 
-    drainToTable(sessions.toDF(), ckpt, table) // sessions closed by data
-    writeSentinel(spark, stageDir, staged, Map("user_id" -> lit(-1L)))
-    drainToTable(sessions.toDF(), ckpt, table) // timeouts fire -> flush
+        drainToTable(sessions.toDF(), ckpt, table) // sessions closed by data
+        writeSentinel(spark, stageDir, Map("user_id" -> lit(-1L)))
+        drainToTable(sessions.toDF(), ckpt, table) // timeouts fire -> flush
+      } finally Drain.rmQuietly(stageDir, ckpt)
 
-    spark.table(table).filter(col("user_id") =!= -1L)
-  }
+      spark.table(table).filter(col("user_id") =!= -1L)
+    }
 }

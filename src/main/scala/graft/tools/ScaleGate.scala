@@ -279,7 +279,7 @@ object ScaleGate {
       // circuits the rebuild) and dies with FAILED_READ_FILE
       spark.sql(
         s"DROP DATABASE IF EXISTS ${graft.sources.DurableIndex.IndexDb} CASCADE")
-      graft.queries.DedupQueries.rmQuietly(warehouse)
+      graft.streaming.Drain.rmQuietly(warehouse)
       // a rebuilt artifact lands at the SAME fingerprint-keyed path, so
       // the session's FileStatusCache would otherwise serve the wiped
       // generation's listing
@@ -510,7 +510,7 @@ object ScaleGate {
     if (current) println(s"[scalegate] reusing $out")
     else {
       println(s"[scalegate] generating $out (x$copies${if (skew) " skew" else ""})")
-      graft.queries.DedupQueries.rmQuietly(out)
+      graft.streaming.Drain.rmQuietly(out)
       ScaleGen.generate(spark, src, out, copies, skew)
     }
   }

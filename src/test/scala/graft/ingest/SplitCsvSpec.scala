@@ -97,7 +97,7 @@ class SplitCsvSpec extends SparkSpec {
       val split = SplitCsv.read(spark, s"$dir/*.csv", schema, "_bad", chunk)
       assertSame(mono, split, s"adversarial corpus at chunkBytes=$chunk")
     }
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("split route parallelism scales with chunk count — past the old 512 cap") {
@@ -165,7 +165,7 @@ class SplitCsvSpec extends SparkSpec {
     assert(split.rdd.getNumPartitions > 100,
       s"only ${split.rdd.getNumPartitions} partitions — the distributed " +
         "combine lost the chunk-scaled parallelism")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("structurally broken files degrade to ONE corrupt marker row, not a job abort") {
@@ -205,6 +205,6 @@ class SplitCsvSpec extends SparkSpec {
       "id,address,tag\nq1,\"with\rcarriage\",t\nq2,plain,u\n")
     val ok = SplitCsv.read(spark, s"$dir/ok.csv", schema, "_bad", 16L)
     assert(ok.count() == 2L, "in-quote CR corpus must parse")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 }

@@ -93,7 +93,7 @@ class SplitJsonSpec extends SparkSpec {
       val split = SplitJson.read(spark, s"$dir/*.json", Some(schema), "_bad", chunk)
       assertSame(mono, split, s"adversarial corpus at chunkBytes=$chunk")
     }
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("corrupt semantics: per-ELEMENT capture where the multiLine reader poisons the file") {
@@ -144,7 +144,7 @@ class SplitJsonSpec extends SparkSpec {
     assert(s2.filter(col("_bad").isNull).count() == 2L &&
       s2.filter(col("_bad").isNotNull).count() == 1L && s2.count() == 3L,
       "split route: two good objects, the scalar corrupt, the null dropped")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("inferred-schema path matches the multiLine reader's inference") {
@@ -209,7 +209,7 @@ class SplitJsonSpec extends SparkSpec {
     assert(split.rdd.getNumPartitions > 100,
       s"only ${split.rdd.getNumPartitions} partitions — the distributed " +
         "combine lost the chunk-scaled parallelism")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("structurally broken files degrade to ONE corrupt marker row, not a job abort") {
@@ -239,7 +239,7 @@ class SplitJsonSpec extends SparkSpec {
     assert(df.filter(col("_bad").isNull).select("id").collect()
       .map(_.getString(0)).toSet == Set("g1", "g2", "g3"),
       "neighbor files must parse fully despite the broken one")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("structural validation: wrong shapes and trailing garbage each yield a reasoned marker") {
@@ -320,7 +320,7 @@ class SplitJsonSpec extends SparkSpec {
     assert(lenient.filter(col("_bad").isNull).select("id").collect()
       .map(_.getString(0)).toSet == Set("a", "b"),
       "juxtaposed elements must parse individually (the pinned leniency)")
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("array-typed top-level elements split on ] closes and slice exactly") {
@@ -347,7 +347,7 @@ class SplitJsonSpec extends SparkSpec {
       assert(texts == elems.toSet,
         s"chunk=$chunk: sliced elements differ: $texts")
     }
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 
   test("a long }-run inside a string overflows only the wrong-state scan; the file still parses") {
@@ -371,6 +371,6 @@ class SplitJsonSpec extends SparkSpec {
       "a valid file must not be marked corrupt by a wrong-state overflow")
     assert(df.filter(col("id") === "tail").count() == 1L)
     assert(df.filter(length(col("id")) === 2_500_000).count() == 1L)
-    graft.queries.DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 }

@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.streaming.Drain
 
 /** The drop-cache key/lifecycle contract (round-15 advice): cached
   * streaming-drain drops are a pure function of (corpus content, slice
@@ -18,21 +19,43 @@ class DropCacheSpec extends SparkSpec {
 
   // the per-JVM cache base (round-21 verdict #2: fixture staging is
   // memoized within a JVM only, never across processes)
-  private def cacheBase = DedupQueries.dropCacheBase
+  private def cacheBase = Drain.dropCacheBase
+
+  private val me = ProcessHandle.current()
+  private val myStart = me.info().startInstant().get.toEpochMilli
 
   test("the cache base is scoped to this JVM (no cross-process reuse)") {
     // round-21 verdict #2: a cache surviving the JVM lets one run's
-    // staging pre-compute another run's declared work. The base dir
-    // must be pid-keyed so a fresh process can never find a warm entry.
-    assert(cacheBase.getFileName.toString ==
-      s"graft_drop_cache_pid${ProcessHandle.current().pid()}",
-      s"cache base ${cacheBase} is not scoped to this JVM")
+    // staging pre-compute another run's declared work. The base lives
+    // under the JVM's scratch root, keyed by pid AND start instant, so
+    // a fresh process — even one that reuses a dead JVM's pid — can
+    // never find a warm entry.
+    assert(cacheBase == Drain.root.resolve("drop_cache"),
+      s"cache base $cacheBase is not under the JVM's scratch root")
+    assert(Drain.root.getFileName.toString == s"graft_jvm${me.pid()}_$myStart",
+      s"scratch root ${Drain.root} is not keyed by this JVM's pid and start")
+  }
+
+  test("a root left by an earlier JVM with this pid is swept, the live one kept") {
+    // pid reuse: a kill -9'd JVM skipped its shutdown hook, and a later
+    // process received its pid. Only the start instant tells them apart.
+    val parent = Files.createTempDirectory("graft_sweep")
+    try {
+      val live = Files.createDirectory(parent.resolve(s"graft_jvm${me.pid()}_$myStart"))
+      val reused = Files.createDirectory(
+        parent.resolve(s"graft_jvm${me.pid()}_${myStart - 60000L}"))
+      val other = Files.createDirectory(parent.resolve("graft_other"))
+      Drain.sweep(parent)
+      assert(!Files.exists(reused), "a dead JVM's root survived because its pid is reused")
+      assert(Files.exists(live), "the sweep removed a live JVM's root")
+      assert(Files.exists(other), "the sweep removed a dir that is not a scratch root")
+    } finally Drain.rmQuietly(parent.toString)
   }
 
   test("a slice-logic change invalidates the cache instead of serving stale drops") {
     val srcDir = Files.createTempDirectory("graft_dropkey").toString
     try {
-      DedupQueries.stageDropsCached(spark, sfDir, "dropkeyspec",
+      Drain.stageDropsCached(spark, sfDir, "dropkeyspec",
         "documents.parquet", srcDir, 1)(
         _ => docs.filter(col("doc_id") % 10 === 1).select("doc_id"))
       val first = spark.read.parquet(s"$srcDir/drop_0.parquet")
@@ -41,20 +64,20 @@ class DropCacheSpec extends SparkSpec {
       // same (family, dir, corpus) — ONLY the slice predicate changes.
       // Before the slice-plan key component this silently re-served
       // slice A's cached file.
-      DedupQueries.stageDropsCached(spark, sfDir, "dropkeyspec",
+      Drain.stageDropsCached(spark, sfDir, "dropkeyspec",
         "documents.parquet", srcDir, 1)(
         _ => docs.filter(col("doc_id") % 10 === 2).select("doc_id"))
       val second = spark.read.parquet(s"$srcDir/drop_0.parquet")
       assert(second.filter(col("doc_id") % 10 =!= 2).isEmpty
         && second.count() > 0,
         "a re-sliced family was served the previous slicing's cached drops")
-    } finally DedupQueries.rmQuietly(srcDir)
+    } finally Drain.rmQuietly(srcDir)
   }
 
   test("identical invocations hit the cache (one published entry, reused)") {
     val srcDir = Files.createTempDirectory("graft_drophit").toString
     try {
-      def stage(): Unit = DedupQueries.stageDropsCached(spark, sfDir,
+      def stage(): Unit = Drain.stageDropsCached(spark, sfDir,
         "drophitspec", "documents.parquet", srcDir, 2)(
         i => docs.filter(col("doc_id") % 10 === i).select("doc_id"))
       stage()
@@ -71,13 +94,13 @@ class DropCacheSpec extends SparkSpec {
       assert(Files.getLastModifiedTime(
         mine.head.resolve("drop_0.parquet")) == fileTime,
         "a cache hit rebuilt the published drops")
-    } finally DedupQueries.rmQuietly(srcDir)
+    } finally Drain.rmQuietly(srcDir)
   }
 
   test("a reader racing the idle sweep rebuilds instead of failing") {
     val srcDir = Files.createTempDirectory("graft_dropswept").toString
     try {
-      def stage(): Unit = DedupQueries.stageDropsCached(spark, sfDir,
+      def stage(): Unit = Drain.stageDropsCached(spark, sfDir,
         "dropsweptspec", "documents.parquet", srcDir, 1)(
         _ => docs.filter(col("doc_id") % 10 === 3).select("doc_id"))
       stage()
@@ -94,6 +117,6 @@ class DropCacheSpec extends SparkSpec {
       val got = spark.read.parquet(s"$srcDir/drop_0.parquet")
       assert(got.filter(col("doc_id") % 10 =!= 3).isEmpty && got.count() > 0,
         "post-race rebuild served wrong drops")
-    } finally DedupQueries.rmQuietly(srcDir)
+    } finally Drain.rmQuietly(srcDir)
   }
 }

@@ -174,7 +174,7 @@ class DurableArtifactsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.catalyst.TableIdentifier
     val tbl = JvmScratch.resetTable(spark, "compact_probe")
-    DedupQueries.createBatchSink(spark, tbl, Seq("id" -> "bigint"))
+    graft.streaming.Drain.createBatchSink(spark, tbl, Seq("id" -> "bigint"))
     def appendBatches(bs: Range): Unit = bs.foreach { b =>
       spark.range(b * 100L, b * 100L + 100L)
         .select(col("id"), lit(b.toLong).as("batch_id"))
@@ -225,7 +225,7 @@ class DurableArtifactsSpec extends SparkSpec {
     // every LIVE batch (the horizon-scoped contract, stated not silent)
     import org.apache.spark.sql.functions.{col, lit, max}
     val tbl = JvmScratch.resetTable(spark, "horizon_probe")
-    DedupQueries.createBatchSink(spark, tbl,
+    graft.streaming.Drain.createBatchSink(spark, tbl,
       Seq("k" -> "bigint", "reg" -> "int"))
     (0 until 6).foreach { b =>
       spark.range(40)
@@ -289,15 +289,16 @@ class DurableArtifactsSpec extends SparkSpec {
     // and the grown band index came out of the same drain fragmented —
     // the bucketed half of the contract, folded by the same machinery
     val bands = JvmScratch.tableName("stream_cc_bands")
-    val counts = DedupQueries.bucketFileCounts(spark, bands)
+    val counts = graft.sources.DurableIndex.bucketFileCounts(spark, bands)
     assert(counts.values.exists(_ > 2),
       s"expected some fragmented bucket in the grown cc band index, got $counts")
     val bandContent = spark.table(bands)
       .select("doc_id", "band_idx", "band_key")
       .orderBy("doc_id", "band_idx", "band_key").collect().toSeq
-    assert(DedupQueries.compactBandIndex(spark, bands),
+    assert(graft.sources.DurableIndex.compactBucketed(spark, bands,
+        DedupQueries.BandIndexCols, "band_key"),
       "cc band-index compaction did not run")
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.forall(_ <= 1),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.forall(_ <= 1),
       "cc band-index compaction left a fragmented bucket")
     val bandRe = spark.table(bands)
       .select("doc_id", "band_idx", "band_key")
@@ -318,7 +319,7 @@ class DurableArtifactsSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     DedupQueries.streamComponents(spark, sfDir, compact = false).collect()
     val bands = JvmScratch.tableName("stream_cc_bands")
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.exists(_ > 2),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.exists(_ > 2),
       "expected a fragmented grown band index — test is vacuous")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.execution.SparkPlan]()
@@ -336,7 +337,8 @@ class DurableArtifactsSpec extends SparkSpec {
       .toList
     spark.listenerManager.register(listener)
     try {
-      assert(DedupQueries.compactBandIndex(spark, bands),
+      assert(graft.sources.DurableIndex.compactBucketed(spark, bands,
+        DedupQueries.BandIndexCols, "band_key"),
         "band-index compaction did not run")
       // the listener bus is async: poll until the rewrite plan lands
       val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
@@ -349,7 +351,7 @@ class DurableArtifactsSpec extends SparkSpec {
       assert(txt.contains("Scan parquet") || txt.contains("FileScan"),
         s"compaction rewrite input is not a raw parquet scan:\n$txt")
     }
-    assert(DedupQueries.bucketFileCounts(spark, bands).values.forall(_ <= 1),
+    assert(graft.sources.DurableIndex.bucketFileCounts(spark, bands).values.forall(_ <= 1),
       "raw-scan compaction left a fragmented bucket")
   }
 

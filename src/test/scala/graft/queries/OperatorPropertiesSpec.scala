@@ -259,7 +259,7 @@ class OperatorPropertiesSpec extends SparkSpec {
         .filter(col("doc_id") % 10 =!= 7))
     assert(pairs.exceptAll(want).isEmpty && want.exceptAll(pairs).isEmpty,
       s"artifact-fed pair build diverged from the text-fed recompute ($pairCnt pairs)")
-    DedupQueries.rmQuietly(dir)
+    graft.streaming.Drain.rmQuietly(dir)
   }
 
   test("large-delta gate reads staged-block storage metadata") {

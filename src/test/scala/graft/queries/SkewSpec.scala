@@ -83,7 +83,7 @@ class SkewSpec extends SparkSpec {
       .select("doc_id", "sg").localCheckpoint()
     assert(DedupQueries.deltaIsLarge(deltaSh),
       "the skewed delta stayed under the broadcast gate")
-    DedupQueries.rmQuietly(dir)
+    graft.streaming.Drain.rmQuietly(dir)
   }
 
   test("skew embeddings: hot cell forms, the serving surge drops its broadcasts naturally, routes agree") {
@@ -127,7 +127,7 @@ class SkewSpec extends SparkSpec {
       forceLarge = Some(false))
     assert(served.exceptAll(small).isEmpty && small.exceptAll(served).isEmpty,
       "serving routes disagree on the skewed corpus")
-    DedupQueries.rmQuietly(dir)
+    graft.streaming.Drain.rmQuietly(dir)
   }
 
   test("uniform corpus: planted common vocabulary keeps the hh family non-vacuous at scale") {
@@ -153,6 +153,6 @@ class SkewSpec extends SparkSpec {
       .filter(col("text").startsWith("uhh0 "))
     assert(docs.filter(col("doc_id") % 10 =!= 7).count() == 40L * copies)
     assert(docs.filter(col("doc_id") % 10 === 7).count() == 8L * copies)
-    DedupQueries.rmQuietly(dir)
+    graft.streaming.Drain.rmQuietly(dir)
   }
 }

@@ -48,6 +48,6 @@ class StagingLevelSpec extends SparkSpec {
       s"gate-scale corpus staged ${levelOf(big)} — memory-resident " +
         "stagings re-open the eviction heap cliff")
 
-    DedupQueries.rmQuietly(dir.toString)
+    graft.streaming.Drain.rmQuietly(dir.toString)
   }
 }

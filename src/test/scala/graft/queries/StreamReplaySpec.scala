@@ -436,16 +436,17 @@ class StreamReplaySpec extends SparkSpec {
     // several files per bucket — the unbounded-small-files failure mode
     DedupQueries.streamIndexBootstrap(spark, sfDir, compact = false).collect()
     val idx = JvmScratch.tableName("stream_band_index")
-    val before = DedupQueries.bucketFileCounts(spark, idx)
+    val before = graft.sources.DurableIndex.bucketFileCounts(spark, idx)
     assert(before.nonEmpty, "no bucketed data files under the stream-grown index")
     assert(before.values.exists(_ > 2),
       s"expected some bucket fragmented past 2 files after 3 drops, got $before")
     val content = spark.table(idx).select("doc_id", "band_idx", "band_key")
       .orderBy("doc_id", "band_idx", "band_key").collect().toSeq
 
-    assert(DedupQueries.compactBandIndex(spark, idx), "compaction did not run")
+    assert(graft.sources.DurableIndex.compactBucketed(spark, idx,
+        DedupQueries.BandIndexCols, "band_key"), "compaction did not run")
 
-    val after = DedupQueries.bucketFileCounts(spark, idx)
+    val after = graft.sources.DurableIndex.bucketFileCounts(spark, idx)
     assert(after.values.sum < before.values.sum,
       s"file count did not drop: ${before.values.sum} -> ${after.values.sum}")
     assert(after.values.forall(_ <= 1),
@@ -454,7 +455,8 @@ class StreamReplaySpec extends SparkSpec {
       .orderBy("doc_id", "band_idx", "band_key").collect().toSeq
     assert(recontent == content, "compaction changed the index contents")
     // a second pass finds nothing to do
-    assert(!DedupQueries.compactBandIndex(spark, idx),
+    assert(!graft.sources.DurableIndex.compactBucketed(spark, idx,
+        DedupQueries.BandIndexCols, "band_key"),
       "compaction re-ran on an already-compacted index")
   }
 }

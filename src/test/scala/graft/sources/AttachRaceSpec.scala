@@ -96,6 +96,6 @@ class AttachRaceSpec extends SparkSpec {
     }
     assert(leaked.isEmpty, s"build dirs leaked or nested: $leaked")
 
-    graft.queries.DedupQueries.rmQuietly(work)
+    graft.streaming.Drain.rmQuietly(work)
   }
 }

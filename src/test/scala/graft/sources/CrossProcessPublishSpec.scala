@@ -85,6 +85,6 @@ class CrossProcessPublishSpec extends SparkSpec {
     assert(m.get.group(1).toInt > 0,
       s"cross-process reader never completed a legal read (vacuous): ${m.get.matched}")
 
-    graft.queries.DedupQueries.rmQuietly(work)
+    graft.streaming.Drain.rmQuietly(work)
   }
 }
